@@ -1,9 +1,12 @@
 """Checkpoint/resume, salted-join equivalence, and streaming sentinel —
 Spark-side tests."""
 
+import glob
 import json
 import os
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from tree_code_chunker_spark.operators.checkpoint import (
@@ -53,6 +56,61 @@ def test_checkpoint_uncommitted_recomputes(spark, tmp_path):
 
     run_stage(spark, root, "s", build)
     assert calls["n"] == 1
+
+
+@pytest.mark.parametrize("partition_by", [None, ["z"]])
+def test_manifest_lineage_matches_written_files(spark, tmp_path, partition_by):
+    """Each manifest partition is a write task: its row count equals what an
+    independent reader finds in the files named part-<task>, and n_bytes is
+    the summed size of the committed parquet files."""
+    root = str(tmp_path / "ckpt")
+    df = spark.range(1000).repartition(5)
+    if partition_by:  # the raster_tiles shape: one file per (task, z)
+        df = df.withColumn("z", (F.col("id") % 3) * 4 + 4)
+    m = commit_stage(df, root, "s", partition_by)
+    files = glob.glob(os.path.join(root, "s", "**", "*.parquet"),
+                      recursive=True)
+    want = dict(duckdb.connect().execute(f"""
+        SELECT CAST(regexp_extract(filename, 'part-(\\d+)', 1) AS INT) AS t,
+               count(*)
+        FROM read_parquet({files!r}, filename=true, hive_partitioning=false)
+        GROUP BY t ORDER BY t""").fetchall())
+    assert len(want) == 5
+    assert {p["partition_id"]: p["n_rows"] for p in m["partitions"]} == want
+    assert [p["partition_id"] for p in m["partitions"]] == sorted(want)
+    assert m["n_rows"] == 1000 and m["committed"]
+    assert m["n_bytes"] == sum(os.path.getsize(f) for f in files)
+    if partition_by:
+        assert len(files) > len(want)  # some tasks wrote several files
+
+
+def test_manifest_of_empty_stage(spark, tmp_path):
+    root = str(tmp_path / "ckpt")
+    m = commit_stage(spark.range(0), root, "empty")
+    assert m["n_rows"] == 0 and m["committed"]
+    assert sum(p["n_rows"] for p in m["partitions"]) == 0
+    assert is_committed(root, "empty")
+
+
+def test_commit_runs_no_jobs_beyond_the_write(spark, tmp_path):
+    """commit_stage must start exactly the Spark jobs of a bare parquet write
+    of the same frame — its lineage costs no read-back."""
+    sc = spark.sparkContext
+    df = spark.range(2000).repartition(4).withColumn("v", F.col("id") * 3)
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bare = jobs("ckpt-bare", lambda: df.write.mode("overwrite").parquet(
+        str(tmp_path / "bare")))
+    commit = jobs("ckpt-commit", lambda: commit_stage(
+        df, str(tmp_path / "ckpt"), "s"))
+    assert bare >= 1 and commit == bare
 
 
 def test_salted_join_matches_plain_join(spark):

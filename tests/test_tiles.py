@@ -56,6 +56,43 @@ def test_raster_counts_conserved(spark):
     assert by_zoom == {4: 400, 8: 400}
 
 
+def test_raster_tiles_exact_vs_numpy(spark):
+    """Every tile's sparse pixel grid and n_points equal a numpy histogram of
+    the in-tile offsets, down-shifted to the 2^8 raster grid (z=12 has shift
+    4 <= sub_bits, so its offsets are used as they are)."""
+    rng = np.random.RandomState(11)
+    qlat = np.concatenate([rng.randint(0, 65536, 700),
+                           rng.randint(30000, 30040, 300)]).astype(np.int64)
+    qlon = np.concatenate([rng.randint(0, 65536, 700),
+                           rng.randint(41000, 41040, 300)]).astype(np.int64)
+    pts = spark.createDataFrame(
+        [(f"d{i:04d}", 0, int(a), int(b)) for i, (a, b) in
+         enumerate(zip(qlat, qlon))],
+        "doc_id string, span_pos int, qlat bigint, qlon bigint")
+    sub_bits = 8
+    want = {}
+    for z in (4, 8, 12):
+        x, y = tile_np(qlat, qlon, z)
+        mask = (1 << (16 - z)) - 1
+        down = max(16 - z - sub_bits, 0)
+        px = (qlon & mask) >> down
+        py = ((65535 - qlat) & mask) >> down
+        keys, counts = np.unique(np.stack([x, y, px, py], axis=1), axis=0,
+                                 return_counts=True)
+        for (tx, ty, a, b), n in zip(keys.tolist(), counts.tolist()):
+            want.setdefault((z, tx, ty), []).append((a, b, n))
+    out = raster_tiles(pts, zooms=(4, 8, 12), sub_bits=sub_bits)
+    assert out.schema.simpleString() == (
+        "struct<z:int,x:bigint,y:bigint,"
+        "pixels:array<struct<px:int,py:int,n:bigint>>,n_points:bigint>")
+    assert [f.nullable for f in out.schema] == [False, True, True, False, True]
+    got = {(r["z"], r["x"], r["y"]): (
+        [tuple(p) for p in r["pixels"]], r["n_points"]) for r in out.collect()}
+    assert got == {k: (sorted(v), sum(n for *_, n in v))
+                   for k, v in want.items()}
+    assert max(n for pix, _ in got.values() for *_, n in pix) > 1  # hot pixels
+
+
 def test_tiles_deterministic_across_parallelism(spark):
     pts = _pts(spark, 600)
     a = vector_tiles(pts.repartition(1), zooms=(8,)).collect()

@@ -9,21 +9,26 @@ pattern; swapping the writer for `df.writeTo(tbl).append()` on a real
 cluster is a one-line change, gated below).
 
 Manifest per stage: {stage, snapshot_id, committed, n_rows, n_bytes,
-partitions: [{partition_id, n_rows}], wall_sec}.  `run_stage` skips stages
-whose manifest says committed (idempotent rerun — reference analogue:
-ChunkBatch's per-file error isolation + deterministic restart,
-codechunk.go:295-391).
+partitions: [{partition_id, n_rows}], wall_sec}.  A partition is a write
+task; its rows come from the parquet footers of the files it committed, not
+from a Spark read-back.  `run_stage` skips stages whose manifest says
+committed (idempotent rerun — reference analogue: ChunkBatch's per-file
+error isolation + deterministic restart, codechunk.go:295-391).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import Window
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+
+_PART_FILE = re.compile(r"part-(\d+)")
 
 
 def _manifest_path(root: str, stage: str) -> str:
@@ -43,7 +48,9 @@ def is_committed(root: str, stage: str) -> bool:
 
 def commit_stage(df: DataFrame, root: str, stage: str,
                  partition_by: list[str] | None = None) -> dict:
-    """Write stage output + manifest with per-partition row counts."""
+    """Write stage output + manifest with per-write-task row counts: a
+    file's task is the `part-NNNNN` in its name (a `partition_by` task
+    writes several, summed) and its rows are its footer's `num_rows`."""
     out_dir = os.path.join(root, stage)
     t0 = time.perf_counter()
     w = df.write.mode("overwrite")
@@ -51,28 +58,23 @@ def commit_stage(df: DataFrame, root: str, stage: str,
         w = w.partitionBy(*partition_by)
     w.parquet(out_dir)
 
-    spark = df.sparkSession
-    written = spark.read.parquet(out_dir)
-    per_part = (
-        written.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid").agg(F.count("*").alias("n_rows"))
-        .collect()
-    )
-    n_rows = sum(r["n_rows"] for r in per_part)
+    per_task: Counter[int] = Counter()
     n_bytes = 0
     for dirpath, _dirs, files in os.walk(out_dir):
-        n_bytes += sum(os.path.getsize(os.path.join(dirpath, fn))
-                       for fn in files if fn.endswith(".parquet"))
+        for fn in files:
+            if fn.endswith(".parquet"):
+                path = os.path.join(dirpath, fn)
+                task = int(_PART_FILE.match(fn).group(1))
+                per_task[task] += pq.read_metadata(path).num_rows
+                n_bytes += os.path.getsize(path)
     manifest = {
         "stage": stage,
         "snapshot_id": uuid.uuid4().hex,
         "committed": True,
-        "n_rows": int(n_rows),
-        "n_bytes": int(n_bytes),
-        "partitions": [
-            {"partition_id": int(r["_pid"]), "n_rows": int(r["n_rows"])}
-            for r in sorted(per_part, key=lambda r: r["_pid"])
-        ],
+        "n_rows": sum(per_task.values()),
+        "n_bytes": n_bytes,
+        "partitions": [{"partition_id": t, "n_rows": n}
+                       for t, n in sorted(per_task.items())],
         "wall_sec": round(time.perf_counter() - t0, 3),
     }
     tmp = _manifest_path(root, stage) + ".tmp"

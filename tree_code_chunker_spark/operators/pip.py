@@ -10,9 +10,10 @@ Physical plan, designed for 10^12 points x 10^3..10^5 polygons:
  2. **Prune**: candidates = points ⋈ cover on the res-r cell key.  The cover
     side is small (polygons x covering cells) => `F.broadcast` — no shuffle
     of the 10^12-row point side at all.
- 3. **Exact**: integer ray-cast (even-odd rule, half-open edges) as a JVM
-    higher-order expression over an edge array carried on the broadcast
-    cover rows — no Python, no Arrow transfer, no extra shuffle.
+ 3. **Exact**: integer ray-cast (even-odd rule, half-open edges), no extra
+    shuffle.  The default runs it as a numpy pandas UDF, so every candidate
+    crosses the Arrow boundary; the JVM variants evaluate an expression over
+    an edge array carried on the broadcast cover rows (see `pip_join`).
 
 Determinism: polygons and points live on the integer grid (config.GRID_BITS);
 the crossing test is integer cross-multiplication — no float division, so
@@ -459,12 +460,14 @@ def pip_join(
     Returns one row per (point, containing polygon) with `keep_cols` +
     polygon_id + qlat/qlon.
 
-    Physical plan: the broadcast cover rows CARRY the polygon's packed edge
-    array, and the exact even-odd test runs as a JVM higher-order expression
-    on the joined rows — the probe (point) side is never shuffled and never
-    crosses into Python, so throughput scales linearly with cores.  (An
-    earlier pandas-UDF ray-cast was Arrow-transfer-bound and did not scale;
-    ray_cast_np remains as the numpy oracle used by tests.)
+    Physical plan (exact="numpy", the default): points join the broadcast
+    classified cover on the cell key, so the probe (point) side is never
+    shuffled; then EVERY candidate row crosses into Python — the vectorized
+    numpy ray-cast is a pandas UDF over the Arrow stream, and Spark
+    evaluates it even on full-cell rows that the filter accepts without it.
+    That Arrow boundary is this path's cost.  Any other `exact` value keeps
+    the test in the JVM (the cover rows carry each polygon's packed edge
+    array; an unrolled or higher-order expression runs on the joined rows).
     """
     if polygons is None and index is None:
         raise ValueError("pip_join needs a build side: pass polygons= "

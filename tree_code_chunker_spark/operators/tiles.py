@@ -2,8 +2,8 @@
 
 north_star: "raster<->vector tile materialization at fixed zoom levels with
 deterministic tile assignment".  Assignment is pure integer column math
-(geo.tile_cols — whole-stage codegen, bit-exact); materialization is one
-groupBy per zoom:
+(geo.tile_cols — whole-stage codegen, bit-exact) emitted for every zoom in
+one projection; materialization aggregates on the (z, x, y) key:
 
  * **vector tiles**: per (z,x,y), the list of features (doc_id, span_pos,
    in-tile quantized coords), capped at max_features_per_tile by a
@@ -12,43 +12,45 @@ groupBy per zoom:
    are reported, never silent.
  * **raster tiles**: per (z,x,y), a sub_bits x sub_bits count grid (the
    rasterization), stored sparse as (pixel_index, count) pairs — dense
-   256x256 arrays would be mostly zeros at high zooms.
+   256x256 arrays would be mostly zeros at high zooms: one projection, two
+   aggregations (per pixel, then per tile).
 
-Scale: one shuffle per zoom on the (z,x,y) key; hot tiles are exactly hot
-cells, so `salted_repartition` (operators/skew.py) applies when a census
-flags them; AQE handles moderate skew.
+Scale: all zooms share one shuffle per aggregation on the (z,x,y) key; hot
+tiles are exactly hot cells, so `salted_repartition` (operators/skew.py)
+applies when a census flags them; AQE handles moderate skew.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..config import GRID_BITS, TILE_ZOOMS
-from .geo import tile_cols
+from .geo import GRID_MAX, tile_cols
+
+
+def _zoom_tiles(zooms: tuple[int, ...], sub_bits: int | None = None) -> Column:
+    """inline(array(struct(z, x, y, in_x, in_y) per zoom)): a point's tile and
+    its north-up offset inside the tile — with `sub_bits`, down-sampled to
+    the tile's 2^sub_bits raster grid (zooms whose tiles are already at or
+    below pixel resolution keep the full offset)."""
+    def tile(z):
+        tx, ty = tile_cols(F.col("qlat"), F.col("qlon"), z)
+        shift = GRID_BITS - z
+        down = max(shift - sub_bits, 0) if sub_bits is not None else 0
+        mask = F.lit((1 << shift) - 1)
+        return F.struct(
+            F.lit(z).alias("z"), tx.alias("x"), ty.alias("y"),
+            F.shiftright(F.col("qlon").bitwiseAND(mask), down).alias("in_x"),
+            F.shiftright((F.lit(GRID_MAX) - F.col("qlat")).bitwiseAND(mask),
+                         down).alias("in_y"),
+        )
+    return F.inline(F.array(*[tile(z) for z in zooms]))
 
 
 def assign_tiles(points: DataFrame, zooms: tuple[int, ...] = TILE_ZOOMS) -> DataFrame:
     """points(qlat, qlon, ...) -> one row per (point, zoom) with z/x/y and
     in-tile pixel offsets."""
-    parts = []
-    for z in zooms:
-        tx, ty = tile_cols(F.col("qlat"), F.col("qlon"), z)
-        shift = GRID_BITS - z
-        parts.append(
-            points.withColumns({
-                "z": F.lit(z),
-                "x": tx,
-                "y": ty,
-                # offset of the point inside its tile, north-up pixel space
-                "in_x": F.col("qlon").bitwiseAND(F.lit((1 << shift) - 1)),
-                "in_y": (F.lit((1 << GRID_BITS) - 1) - F.col("qlat"))
-                .bitwiseAND(F.lit((1 << shift) - 1)),
-            })
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return points.select("*", _zoom_tiles(zooms))
 
 
 def vector_tiles(
@@ -128,26 +130,13 @@ def raster_tiles(
 ) -> DataFrame:
     """(z, x, y, pixels array<struct<px:int,py:int,n:bigint>>, n_points) —
     sparse 2^sub_bits x 2^sub_bits count raster per tile."""
-    t = assign_tiles(points, zooms)
-    # in-tile coords down-sampled to the raster grid; tiles at z with
-    # shift <= sub_bits already are at (or below) pixel resolution
-    def px(col, z):
-        shift = GRID_BITS - z
-        down = max(shift - sub_bits, 0)
-        return F.shiftright(col, down)
-
-    parts = []
-    for z in zooms:
-        parts.append(
-            t.filter(F.col("z") == z).withColumns({
-                "px": px(F.col("in_x"), z).cast("int"),
-                "py": px(F.col("in_y"), z).cast("int"),
-            })
-        )
-    tt = parts[0]
-    for p in parts[1:]:
-        tt = tt.unionByName(p)
-    pix = tt.groupBy("z", "x", "y", "px", "py").agg(F.count("*").alias("n"))
+    pix = (
+        points.select(_zoom_tiles(zooms, sub_bits))
+        .groupBy("z", "x", "y",
+                 F.col("in_x").cast("int").alias("px"),
+                 F.col("in_y").cast("int").alias("py"))
+        .agg(F.count("*").alias("n"))
+    )
     return (
         pix.groupBy("z", "x", "y")
         .agg(
@@ -176,11 +165,6 @@ def raster_to_vector(rasters: DataFrame, min_count: int = 1) -> DataFrame:
         )
         .filter(F.col("n") >= min_count)
     )
-
-
-def write_tiles(tiles: DataFrame, path: str) -> None:
-    """Partition layout a tile server would read: /z=<z>/x=<x>/ parquet."""
-    tiles.write.mode("overwrite").partitionBy("z", "x").parquet(path)
 
 
 # 3x3 integer smoothing kernel (binomial outer product [1,2,1]^T [1,2,1]):
