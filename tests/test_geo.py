@@ -184,9 +184,14 @@ def test_pip_join_argument_validation(spark):
         "doc_id string, span_pos long, qlat long, qlon long")
     with pytest.raises(ValueError, match="build side"):
         pip_join(pts)
-    idx = build_polygon_index(gen_polygons(spark, 3, seed=43))
-    with pytest.raises(ValueError, match="PolygonIndex"):
-        pip_join(pts, exact="jvm", index=idx)
+    polys = gen_polygons(spark, 3, seed=43)
+    idx = build_polygon_index(polys)
+    # the numpy kernel is the only exact test, with or without an index
+    for exact in ("jvm", "unrolled", ""):
+        with pytest.raises(ValueError, match="exact"):
+            pip_join(pts, exact=exact, index=idx)
+        with pytest.raises(ValueError, match="exact"):
+            pip_join(pts, polys, exact=exact)
 
 
 # ------------------------------------------------------ cover compaction ----
@@ -422,6 +427,227 @@ def test_pip_join_holes_matches_bruteforce(spark):
     assert got == want
     assert len(want) > 0
     assert in_hole > 0  # the fixture's holes genuinely exclude points
+
+
+def _pip_bruteforce(pack, rows):
+    """Sorted (doc_id, span_pos, polygon_id, qlat, qlon) rows of every
+    (point, polygon) pair that ray_cast_rings_np puts inside; rows with a
+    null coordinate match nothing."""
+    import numpy as np
+
+    from tree_code_chunker_spark.operators.pip import ray_cast_rings_np
+
+    rows = [r for r in rows if r[2] is not None and r[3] is not None]
+    py = np.array([r[2] for r in rows], dtype=np.int64)
+    px = np.array([r[3] for r in rows], dtype=np.int64)
+    return sorted((rows[i][0], rows[i][1], str(pid), rows[i][2], rows[i][3])
+                  for pid, rings in pack.items()
+                  for i in np.nonzero(ray_cast_rings_np(rings, py, px))[0])
+
+
+@pytest.mark.parametrize("fixture,doc_type", [("plain", "string"),
+                                              ("holes", "bigint")])
+def test_pip_join_kernel_matches_bruteforce(spark, fixture, doc_type):
+    """pip_join's cell-table kernel == brute-force ray_cast_rings_np over
+    every point x polygon, on the points where cell lookup and the
+    half-open rule bite: cell borders, polygon vertices, lattice points on
+    edges, points in no cover cell or off the grid, and null coordinates,
+    which match nothing (as the old cell equi-join dropped them)."""
+    from math import gcd
+
+    import numpy as np
+
+    from tree_code_chunker_spark.config import GRID_BITS
+    from tree_code_chunker_spark.operators.pip import (
+        DEFAULT_COVER_RES,
+        _collect_polygon_pack,
+        pip_join,
+    )
+    from tree_code_chunker_spark.sources.datagen import (
+        gen_polygons,
+        gen_polygons_holes,
+    )
+
+    polys = (gen_polygons(spark, 40, seed=43) if fixture == "plain"
+             else gen_polygons_holes(spark, 12, seed=47))
+    pack = _collect_polygon_pack(polys)
+    side = 1 << (GRID_BITS - DEFAULT_COVER_RES)
+    coords = set()
+    for rings in pack.values():
+        for ys, xs in rings:
+            for i in range(len(ys) - 1):
+                y, x = int(ys[i]), int(xs[i])
+                dy, dx = int(ys[i + 1]) - y, int(xs[i + 1]) - x
+                g = max(gcd(dy, dx), 1)
+                # the vertex and lattice points exactly on its edge
+                for t in range(0, g, max(g // 4, 1)):
+                    coords.add((y + t * dy // g, x + t * dx // g))
+                # cell borders through and next to the vertex
+                by, bx = y // side * side, x // side * side
+                coords.update({(by, x), (by - 1, x), (y, bx), (y, bx - 1),
+                               (by, bx), (by + side - 1, bx + side - 1)})
+    rng = np.random.RandomState(5)
+    coords.update(zip(rng.randint(0, 1 << GRID_BITS, 3000).tolist(),
+                      rng.randint(0, 1 << GRID_BITS, 3000).tolist()))
+    # no cover cell; off the grid on each side
+    coords.update({(5, 5), (65535, 65535), (-3, 30000), (30000, 70000)})
+    doc = str if doc_type == "string" else int
+    rows = [(doc(i), i, y, x) for i, (y, x) in enumerate(sorted(coords))]
+    (vys, vxs), *_ = next(iter(pack.values()))  # a vertex of some shell
+    vy, vx = int(vys[0]), int(vxs[0])
+    n = len(rows)
+    rows += [(doc(n), n, None, vx), (doc(n + 1), n + 1, vy, None),
+             (doc(n + 2), n + 2, None, None)]
+    pts = spark.createDataFrame(
+        rows, f"doc_id {doc_type}, span_pos long, qlat long, qlon long")
+
+    got = sorted(tuple(r) for r in pip_join(pts, polys).collect())
+    want = _pip_bruteforce(pack, rows)
+    assert got == want
+    on_border = [r for r in want if r[3] % side == 0 or r[4] % side == 0]
+    assert len(want) > 100 and on_border
+
+
+def test_pip_join_keep_col_types_and_int_polygon_ids(spark):
+    """keep_cols of any type ride through the kernel unchanged, integer
+    polygon ids come out as strings ('7'), and the output schema is
+    keep_cols + nullable string polygon_id + qlat/qlon, field for field
+    as the points declared them."""
+    import datetime
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from tree_code_chunker_spark.operators.pip import (
+        _collect_polygon_pack,
+        pip_join,
+    )
+
+    def square(y, x, r):
+        return [(y - r, x - r), (y - r, x + r), (y + r, x + r),
+                (y + r, x - r), (y - r, x - r)]
+
+    polys = spark.createDataFrame(
+        [(7, square(20000, 20000, 3000)), (11, square(22000, 21000, 1500)),
+         (12, [(40000, 40000), (40000, 46000), (46000, 43000), (40000, 40000)])],
+        "polygon_id bigint, ring array<struct<qlat:bigint,qlon:bigint>>")
+    ts0 = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    rows = [(i, float(i) / 3, ts0 + datetime.timedelta(seconds=i),
+             None if i % 5 == 0 else f"t{i}", [i, i + 1], 17000 + 53 * i,
+             17000 + 47 * (i % 97), i % 2 == 0)
+            for i in range(400)]
+    rows += [(1000 + i, 0.5, ts0, "x", [], 40000 + 50 * i, 40100 + 60 * i, True)
+             for i in range(100)]
+    pts = spark.createDataFrame(
+        rows, "doc_id bigint, value double, ts timestamp, tag string, "
+              "arr array<int>, qlat bigint, qlon int, flag boolean")
+    keep = ("doc_id", "value", "ts", "tag", "arr", "flag")
+    out = pip_join(pts, polys, keep_cols=keep)
+
+    s = pts.schema
+    assert out.schema == StructType(
+        [s[c] for c in keep] + [StructField("polygon_id", StringType(), True),
+                                s["qlat"], s["qlon"]])
+    got = sorted((r["doc_id"], r["polygon_id"], r["value"], r["ts"], r["tag"],
+                  tuple(r["arr"]), r["flag"], r["qlat"], r["qlon"])
+                 for r in out.collect())
+    by_id = {r[0]: r for r in rows}
+    want = sorted((d, pid, *by_id[d][1:3], by_id[d][3], tuple(by_id[d][4]),
+                   by_id[d][7], y, x)
+                  for d, _, pid, y, x in _pip_bruteforce(
+                      _collect_polygon_pack(polys),
+                      [(r[0], 0, r[5], r[6]) for r in rows]))
+    assert got == want
+    assert {r[1] for r in got} == {"7", "11", "12"}
+
+
+def test_pip_join_hot_cell_slices_match(spark, monkeypatch):
+    """~50 polygons cover one hot cell: expanding candidates in slices of
+    a tiny cap (slice edges inside a point's candidate range) yields the
+    same rows as the default cap and as brute force, and no slice holds
+    more candidates than the cap."""
+    import numpy as np
+    import pyarrow as pa
+
+    from tree_code_chunker_spark.operators import pip
+
+    cy = cx = 30000
+    rings = []
+    for p in range(50):
+        r = 200 + 37 * p
+        if p % 2:  # diamond: boundary cells only
+            ring = [(cy - r, cx), (cy, cx + r), (cy + r, cx), (cy, cx - r)]
+        else:
+            ring = [(cy - r, cx - r), (cy - r, cx + r), (cy + r, cx + r),
+                    (cy + r, cx - r)]
+        rings.append((f"h{p:02d}", ring + ring[:1]))
+    polys = spark.createDataFrame(
+        rings, "polygon_id string, ring array<struct<qlat:bigint,qlon:bigint>>")
+    rng = np.random.RandomState(9)
+    rows = [(f"d{i}", i, int(cy + rng.randint(-700, 700)),
+             int(cx + rng.randint(-700, 700))) for i in range(400)]
+    pts = spark.createDataFrame(
+        rows, "doc_id string, span_pos long, qlat long, qlon long")
+    idx = pip.build_polygon_index(polys)
+    assert np.diff(idx._cells[1]).max() >= 45  # the hot cell
+
+    default = sorted(tuple(r) for r in pip.pip_join(pts, index=idx).collect())
+    monkeypatch.setattr(pip, "CHUNK", 7)
+    sliced = sorted(tuple(r) for r in pip.pip_join(pts, index=idx).collect())
+    assert sliced == default == _pip_bruteforce(pip._collect_polygon_pack(polys),
+                                                rows)
+
+    batch = pa.RecordBatch.from_pylist(
+        [dict(zip(("doc_id", "qlat", "qlon"), (r[0], r[2], r[3]))) for r in rows])
+    out = list(pip._pip_batches([batch], idx._cells, idx.edges_bc.value,
+                                idx.res, 7))
+    assert len(out) > 400 and max(b.num_rows for b in out) <= 7
+    assert sum(b.num_rows for b in out) == len(default)
+
+
+def test_polygon_index_build_runs_only_the_pack_collect(spark):
+    """build_polygon_index starts no Spark job beyond the polygon pack
+    collect and builds no cover DataFrame; pip_join never needs one, and
+    polygon_distance_join builds it on first use with the same result as
+    a fresh index."""
+    from pyspark.sql import functions as F
+
+    from tree_code_chunker_spark.operators.geo import derive_point_cols
+    from tree_code_chunker_spark.operators.pip import (
+        _collect_polygon_pack,
+        build_polygon_index,
+        pip_join,
+        polygon_distance_join,
+    )
+    from tree_code_chunker_spark.sources.datagen import gen_polygons
+
+    sc = spark.sparkContext
+    polys = gen_polygons(spark, 20, seed=43)
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, pack_jobs = jobs("pidx-pack", lambda: _collect_polygon_pack(polys))
+    idx, build_jobs = jobs("pidx-build", lambda: build_polygon_index(polys))
+    assert build_jobs == pack_jobs
+    assert idx._cover_ix is None
+
+    pts = spark.range(1500).select(
+        F.col("id").alias("doc_id"), F.lit(0).cast("long").alias("span_pos"))
+    qlat, qlon = derive_point_cols(F.col("doc_id"), F.col("span_pos"))
+    pts = pts.select("doc_id", "span_pos", qlat.alias("qlat"), qlon.alias("qlon"))
+    assert pip_join(pts, index=idx).count() > 0
+    assert idx._cover_ix is None
+
+    lazy = sorted(map(tuple, polygon_distance_join(pts, index=idx,
+                                                   radius=700).collect()))
+    assert idx._cover_ix is not None
+    fresh = sorted(map(tuple, polygon_distance_join(pts, polys, 700).collect()))
+    assert lazy == fresh and len(lazy) > 0
 
 
 def _poly_dist_np(rings, py, px):

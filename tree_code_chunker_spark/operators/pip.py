@@ -6,14 +6,16 @@ the 2-D generalization of the reference's point-in-interval scope join
 
 Physical plan, designed for 10^12 points x 10^3..10^5 polygons:
  1. **Cover**: polygon bbox -> all covering cells at coarse resolution
-    `res` (distributed explode — no driver loop over polygons).
- 2. **Prune**: candidates = points ⋈ cover on the res-r cell key.  The cover
-    side is small (polygons x covering cells) => `F.broadcast` — no shuffle
-    of the 10^12-row point side at all.
- 3. **Exact**: integer ray-cast (even-odd rule, half-open edges), no extra
-    shuffle.  The default runs it as a numpy pandas UDF, so every candidate
-    crosses the Arrow boundary; the JVM variants evaluate an expression over
-    an edge array carried on the broadcast cover rows (see `pip_join`).
+    `res`, classified full / boundary / outside once per polygon set and
+    broadcast as a sorted cell table (`PolygonIndex`).
+ 2. **Prune**: one Arrow-batched numpy kernel over the point stream
+    (`mapInArrow`) looks each point's cell key up in that table and expands
+    the point over the polygons covering its cell — no join and no
+    per-query broadcast exchange, so the 10^12-row point side is never
+    shuffled.
+ 3. **Exact**: in the same kernel, full-cell candidates are accepted by
+    mask; only boundary-cell candidates take the integer ray cast (even-odd
+    rule, half-open edges) over the broadcast edge tensors.
 
 Determinism: polygons and points live on the integer grid (config.GRID_BITS);
 the crossing test is integer cross-multiplication — no float division, so
@@ -29,8 +31,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import GRID_BITS
 from .geo import cell_at_res_col
@@ -160,71 +163,14 @@ def ray_cast_rings_np(rings: list, py: np.ndarray, px: np.ndarray) -> np.ndarray
 
 def _closed_ring_col(ring):
     """Normalize ring closure (append first vertex when the ring is open) so
-    the JVM exact path never silently drops the closing edge — keeps it
-    consistent with the numpy path, which closes defensively."""
+    a column-expression consumer never silently drops the closing edge —
+    consistent with the numpy pack, which closes defensively."""
     first = F.element_at(ring, 1)
     last = F.element_at(ring, -1)
     return F.when(
         (first["qlat"] == last["qlat"]) & (first["qlon"] == last["qlon"]),
         ring,
     ).otherwise(F.concat(ring, F.array(first)))
-
-
-def _edges_col(ring):
-    """ring array<struct<qlat,qlon>> -> array<struct<y1,x1,y2,x2>> (closure
-    normalized first)."""
-    ring = _closed_ring_col(ring)
-    return F.transform(
-        F.sequence(F.lit(0), F.size(ring) - 2),
-        lambda i: F.struct(
-            F.element_at(ring, i + 1)["qlat"].alias("y1"),
-            F.element_at(ring, i + 1)["qlon"].alias("x1"),
-            F.element_at(ring, i + 2)["qlat"].alias("y2"),
-            F.element_at(ring, i + 2)["qlon"].alias("x2"),
-        ),
-    )
-
-
-def _crossing_pred(y1, x1, y2, x2, py, px):
-    straddles = (y1 > py) != (y2 > py)
-    dy = y2 - y1
-    lhs = (px - x1) * dy
-    rhs = (py - y1) * (x2 - x1)
-    return straddles & (F.when(dy > 0, lhs < rhs).otherwise(lhs > rhs))
-
-
-def _inside_col(edges, py, px):
-    """Even-odd ray cast as a JVM higher-order expression — integer cross-
-    multiplication, bit-identical to ray_cast_np, zero Python in the plan.
-
-    NOTE: interpreted lambda evaluation (NamedLambdaVariable) contends
-    across threads in one JVM — measured 3x SLOWER at local[32] than
-    local[8].  Used only as the fallback for polygons with more edges than
-    the unrolled fast path covers."""
-
-    def crossing(e):
-        return _crossing_pred(e["y1"], e["x1"], e["y2"], e["x2"], py, px)
-
-    return F.size(F.filter(edges, crossing)) % 2 == 1
-
-
-MAX_UNROLLED_EDGES = 32
-
-
-def _inside_col_unrolled(edges, py, px, max_edges: int = MAX_UNROLLED_EDGES):
-    """Ray cast as a FLAT codegen-friendly expression: the crossing test is
-    unrolled over element_at(i) terms (no lambda variables, so whole-stage
-    codegen applies and threads share nothing).  Exact for polygons with at
-    most max_edges edges; pip_join routes bigger rings to the HOF fallback.
-    """
-    total = F.lit(0)
-    for i in range(max_edges):
-        # F.get is null-safe out-of-bounds (element_at THROWS in ANSI mode
-        # even under a when() guard — evaluation is not short-circuited)
-        e = F.get(edges, i)
-        c = _crossing_pred(e["y1"], e["x1"], e["y2"], e["x2"], py, px)
-        total = total + F.when(c, 1).otherwise(0)  # null crossing -> 0
-    return total % 2 == 1
 
 
 def _classify_cells_np(ys: np.ndarray, xs: np.ndarray, res: int):
@@ -264,51 +210,6 @@ def _classify_cells_rings_np(rings: list, res: int):
     full = corners_in & ~overlap
     keep = full | overlap  # corners-out + no-overlap == fully outside
     return gy[keep], gx[keep], full[keep]
-
-
-def polygon_cover_classified(polygons: DataFrame, res: int = DEFAULT_COVER_RES) -> DataFrame:
-    """(polygon_id, ring) -> (polygon_id, cov_cy, cov_cx, is_full) cover rows,
-    THREE-way classified per cell (distributed, vectorized per polygon):
-
-      * full    — all 4 cell corners inside AND no edge bbox overlaps the
-                  cell: every point in the cell is inside => downstream can
-                  accept its points WITHOUT the exact test,
-      * boundary— some edge bbox overlaps the cell: exact test required,
-      * outside — corners outside, no edge overlap: DROPPED (bbox cover of
-                  concave/star shapes is full of these).
-
-    Conservative by construction (edge-bbox overlap over-approximates edge
-    crossing), so correctness never depends on the classification — only
-    candidate volume does.  This is the standard interior/boundary cover
-    split of spatial indexes (e.g. S2 region coverers).
-    """
-    from typing import Iterator
-
-    def classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_pid, out_cy, out_cx, out_full = [], [], [], []
-            for pid, rings in zip(pdf["polygon_id"], pdf["rings"]):
-                rr = [
-                    _close_np(
-                        np.array([v["qlat"] for v in ring], dtype=np.int64),
-                        np.array([v["qlon"] for v in ring], dtype=np.int64))
-                    for ring in rings
-                ]
-                cy, cx, full = _classify_cells_rings_np(rr, res)
-                out_pid.extend([pid] * len(cy))
-                out_cy.extend(cy.tolist())
-                out_cx.extend(cx.tolist())
-                out_full.extend(full.tolist())
-            yield pd.DataFrame({
-                "polygon_id": out_pid, "cov_cy": out_cy,
-                "cov_cx": out_cx, "is_full": out_full,
-            })
-
-    return polygons.select(
-        "polygon_id", _rings_norm_col(polygons).alias("rings")
-    ).mapInPandas(
-        classify, "polygon_id string, cov_cy bigint, cov_cx bigint, is_full boolean"
-    )
 
 
 def _classify_cells_all_np(pack: dict, ids: list, Y1, X1, Y2, X2, res: int):
@@ -403,8 +304,18 @@ def _edge_tensor(pack: dict):
 
 
 class PolygonIndex:
-    """Prepared build side of the PIP join: packed edge tensors broadcast
-    to executors + the classified cover as a small DataFrame.
+    """Prepared build side of the PIP join, broadcast once to executors:
+    the packed edge tensors (`edges_bc`, `n_edges_bc`) and the classified
+    cover as a sorted cell table (`cells_bc`).
+
+    The cell table maps each res-`res` cover cell key `cov_cy << res |
+    cov_cx` to the polygons whose cover holds that cell: `keys` (int64,
+    sorted, unique, closed by an int64-max sentinel that no point key
+    reaches), CSR `offs` into `poly_ix` (int32) and `is_full`, and the
+    polygon ids as an Arrow string array indexed by poly_ix (integer ids
+    come out as '7', as the `polygon_id string` cover always declared).
+    `cover_ix`, the same cover as a DataFrame, is built on first access —
+    only the distance joins probe it.
 
     Build ONCE per polygon set, probe many times — on a real cluster the
     polygon index outlives thousands of point batches, so the collect/
@@ -427,24 +338,116 @@ class PolygonIndex:
             dtype=np.int64))
         pix, cy, cx, full = _classify_cells_all_np(
             self.pack, ids, Y1, X1, Y2, X2, res)
-        id_arr = np.array(ids, dtype=object)
-        cover_pdf = pd.DataFrame({
-            "polygon_id": id_arr[pix],
-            "poly_ix": pix.astype(np.int32),
-            "cov_cy": cy.astype(np.int64),
-            "cov_cx": cx.astype(np.int64),
-            "is_full": full,
-        })
-        self.cover_ix = spark.createDataFrame(
-            cover_pdf,
-            "polygon_id string, poly_ix int, cov_cy bigint, cov_cx bigint, "
-            "is_full boolean",
+        key = (cy << res) | cx
+        order = np.lexsort((pix, key))
+        key = key[order]
+        keys, starts = np.unique(key, return_index=True)
+        self._cells = (
+            np.append(keys, np.iinfo(np.int64).max),
+            np.append(starts, [len(key), len(key)]),
+            pix[order].astype(np.int32),
+            full[order],
+            pa.array([str(p) for p in ids], pa.string()),
         )
+        self.cells_bc = spark.sparkContext.broadcast(self._cells)
+        self._spark = spark
+        self._cover_ix = None
+
+    @property
+    def cover_ix(self) -> DataFrame:
+        """(polygon_id, poly_ix, cov_cy, cov_cx, is_full) cover rows, made
+        from the cell table on first access."""
+        if self._cover_ix is None:
+            keys, offs, pix, full, pids = self._cells
+            key = np.repeat(keys, np.diff(offs))  # the sentinel holds none
+            mask = (1 << self.res) - 1
+            self._cover_ix = self._spark.createDataFrame(
+                pd.DataFrame({
+                    "polygon_id": pids.take(pix).to_pandas(),
+                    "poly_ix": pix,
+                    "cov_cy": key >> self.res,
+                    "cov_cx": key & mask,
+                    "is_full": full,
+                }),
+                "polygon_id string, poly_ix int, cov_cy bigint, cov_cx bigint, "
+                "is_full boolean",
+            )
+        return self._cover_ix
 
 
 def build_polygon_index(polygons: DataFrame,
                         res: int = DEFAULT_COVER_RES) -> PolygonIndex:
     return PolygonIndex(polygons.sparkSession, polygons, res)
+
+
+CHUNK = 1 << 16  # candidate rows expanded per slice of a point batch
+
+
+def _ray_cast_ix(ix, py, px, y1, x1, y2, x2) -> np.ndarray:
+    """Even-odd ray cast of points (py, px) against polygons `ix` of the
+    padded int32 edge tables — the half-open rule of ray_cast_np.  The test
+    is DRAM-bandwidth-bound at full batch width (measured: per-core
+    throughput drops ~35% from 4 to 16 concurrent workers), so callers pass
+    at most CHUNK rows and every temporary stays int32 and cache-resident;
+    only the two cross-products need int64."""
+    crossings = np.zeros(len(ix), dtype=np.int32)
+    for e in range(y1.shape[1]):
+        ey1 = y1[ix, e]
+        ey2 = y2[ix, e]
+        straddle = (ey1 > py) != (ey2 > py)
+        if not straddle.any():
+            continue
+        ex1 = x1[ix, e]
+        ex2 = x2[ix, e]
+        dy = (ey2 - ey1).astype(np.int64)
+        lhs = (px - ex1) * dy
+        rhs = (py - ey1).astype(np.int64) * (ex2 - ex1)
+        crossings += straddle & np.where(dy > 0, lhs < rhs, lhs > rhs)
+    return (crossings & 1).astype(bool)
+
+
+def _pip_batches(batches, cells, edges, res: int, chunk: int):
+    """Arrow batches of (*keep_cols, qlat, qlon) -> their matches, with a
+    polygon_id column inserted before qlat.
+
+    Per batch: each point's cell key is looked up in the sorted cell table
+    (one searchsorted); the point expands over its cell's polygons in
+    slices of at most CHUNK candidates (a hot cell covered by many
+    polygons never materialises more); full-cell candidates are accepted
+    by mask and only boundary-cell candidates are ray-cast.  A null or
+    off-grid coordinate has no cell, so it matches nothing.  `chunk` is
+    CHUNK as the driver read it."""
+    keys, offs, cell_pix, cell_full, pids = cells
+    shift = GRID_BITS - res
+    side = 1 << res
+    for batch in batches:
+        py, px = (batch.column(i).fill_null(-1).to_numpy().astype(np.int64)
+                  for i in (batch.num_columns - 2, batch.num_columns - 1))
+        cy, cx = py >> shift, px >> shift
+        on_grid = (cy >= 0) & (cy < side) & (cx >= 0) & (cx < side)
+        key = np.where(on_grid, (cy << res) | cx, -1)
+        pos = np.searchsorted(keys, key)
+        cnt = np.where(keys[pos] == key, offs[pos + 1] - offs[pos], 0)
+        ends = np.cumsum(cnt)
+        # candidate j of point i is cell-table entry j + delta[i]
+        delta = offs[pos] - (ends - cnt)
+        total = int(ends[-1]) if len(ends) else 0
+        names = batch.schema.names
+        names = names[:-2] + ["polygon_id"] + names[-2:]
+        for s in range(0, total, chunk):
+            j = np.arange(s, min(s + chunk, total))
+            pt = np.searchsorted(ends, j, side="right")
+            ent = j + delta[pt]
+            pix = cell_pix[ent]
+            hit = cell_full[ent]
+            bnd = ~hit
+            if bnd.any():
+                hit[bnd] = _ray_cast_ix(pix[bnd], py[pt[bnd]].astype(np.int32),
+                                        px[pt[bnd]].astype(np.int32), *edges)
+            if hit.any():
+                cols = batch.take(pt[hit]).columns
+                yield pa.RecordBatch.from_arrays(
+                    cols[:-2] + [pids.take(pix[hit])] + cols[-2:], names=names)
 
 
 def pip_join(
@@ -460,131 +463,33 @@ def pip_join(
     Returns one row per (point, containing polygon) with `keep_cols` +
     polygon_id + qlat/qlon.
 
-    Physical plan (exact="numpy", the default): points join the broadcast
-    classified cover on the cell key, so the probe (point) side is never
-    shuffled; then EVERY candidate row crosses into Python — the vectorized
-    numpy ray-cast is a pandas UDF over the Arrow stream, and Spark
-    evaluates it even on full-cell rows that the filter accepts without it.
-    That Arrow boundary is this path's cost.  Any other `exact` value keeps
-    the test in the JVM (the cover rows carry each polygon's packed edge
-    array; an unrolled or higher-order expression runs on the joined rows).
+    Physical plan: `points.select(*keep_cols, qlat, qlon).mapInArrow` — one
+    numpy kernel per Arrow batch looks each point up in the index's
+    broadcast cell table, accepts full-cell candidates by mask and
+    ray-casts only boundary-cell candidates against the broadcast edge
+    tensors.  There is no join: no per-query broadcast exchange, no
+    shuffle of the point side, and Python sees each point once rather than
+    each candidate.  Pass a prebuilt `index` to amortize the collect/
+    classify/broadcast across probe batches (it is polygon-only,
+    independent of the points).  `exact` names the exact test; "numpy" is
+    the only one.
     """
+    if exact != "numpy":
+        raise ValueError(f"exact={exact!r}: only the 'numpy' exact test exists")
     if polygons is None and index is None:
         raise ValueError("pip_join needs a build side: pass polygons= "
                          "and/or index=")
-    if exact != "numpy" and index is not None:
-        raise ValueError(
-            f"exact={exact!r} builds its cover from the polygons DataFrame "
-            "and cannot use a PolygonIndex — pass polygons= with the JVM "
-            "paths, or use exact='numpy' to probe the index")
-    if exact == "numpy":
-        # classified cover: FULL cells accept their points with no exact
-        # test; only BOUNDARY-cell candidates cross into the vectorized
-        # numpy exact test (one gather into broadcast padded edge tensors +
-        # one crossing evaluation per Arrow batch — no per-polygon grouping,
-        # no giant codegen expression: a 32-term unrolled JVM expression
-        # exceeded HotSpot's JIT method limit and ran interpreted, ~8x
-        # slower than this path).  The build side lives in PolygonIndex —
-        # pass one in to amortize the collect/classify/broadcast across
-        # probe batches (it is polygon-only, independent of the points).
-        spark = points.sparkSession
-        idx = index if index is not None else PolygonIndex(spark, polygons, res)
-        res = idx.res
-        shift = GRID_BITS - res
-        b = idx.edges_bc
-        cover_ix = idx.cover_ix
-
-        CHUNK = 1 << 16  # rows per cache tile
-
-        @F.pandas_udf(BooleanType())
-        def inside(poly_ix: pd.Series, qlat: pd.Series, qlon: pd.Series) -> pd.Series:
-            # cache-tiled kernel: the exact test is DRAM-bandwidth-bound at
-            # full batch width (measured: per-core throughput drops ~35%
-            # from 4 to 16 concurrent workers), so work in 64k-row tiles
-            # with int32 intermediates — every temporary stays cache-
-            # resident; only the two cross-products need int64.
-            y1, x1, y2, x2 = b.value  # int32 [P, E] edge tables
-            ix_all = poly_ix.to_numpy()
-            py_all = qlat.to_numpy(dtype=np.int32)
-            px_all = qlon.to_numpy(dtype=np.int32)
-            out = np.zeros(len(ix_all), dtype=bool)
-            for s in range(0, len(ix_all), CHUNK):
-                ix = ix_all[s:s + CHUNK]
-                py = py_all[s:s + CHUNK]
-                px = px_all[s:s + CHUNK]
-                crossings = np.zeros(len(ix), dtype=np.int32)
-                for e in range(y1.shape[1]):
-                    ey1 = y1[ix, e]
-                    ey2 = y2[ix, e]
-                    straddle = (ey1 > py) != (ey2 > py)
-                    if not straddle.any():
-                        continue
-                    ex1 = x1[ix, e]
-                    ex2 = x2[ix, e]
-                    dy = (ey2 - ey1).astype(np.int64)
-                    lhs = (px - ex1) * dy
-                    rhs = (py - ey1).astype(np.int64) * (ex2 - ex1)
-                    crossings += straddle & np.where(dy > 0, lhs < rhs, lhs > rhs)
-                out[s:s + CHUNK] = (crossings & 1).astype(bool)
-            return pd.Series(out)
-
-        cand = points.join(
-            F.broadcast(cover_ix),
-            (F.shiftright(points["qlat"], shift) == cover_ix["cov_cy"])
-            & (F.shiftright(points["qlon"], shift) == cover_ix["cov_cx"]),
-            "inner",
-        )
-        # single pass: full cells accept unconditionally; boundary cells by
-        # the exact test.  (The UDF is still evaluated on full-cell rows —
-        # Spark pulls Python UDFs out of when/or — but that is ~4% extra
-        # kernel work vs a SECOND broadcast-join pass for a separate
-        # accepted branch, which measured strictly worse.)
-        # grid coords are < 2^16, so the UDF inputs are cast int32 — halves
-        # the Arrow transfer of the candidate stream, which is DRAM-bound
-        return cand.filter(
-            F.col("is_full")
-            | inside("poly_ix", F.col("qlat").cast("int"),
-                     F.col("qlon").cast("int"))
-        ).select(*keep_cols, "polygon_id", "qlat", "qlon")
-
-    # JVM variants (kept for environments without Python workers): unrolled
-    # codegen expression for small rings, interpreted HOF for big ones.
-    # Multi-ring geometries flatten to one edge array per polygon (each
-    # ring closed separately), so the even-odd crossing count handles
-    # holes/multipolygons here too.
-    shift = GRID_BITS - res
-    cover = polygon_cover(polygons, res)
-    edges = polygons.select(
-        "polygon_id",
-        F.flatten(F.transform(_rings_norm_col(polygons),
-                              lambda r: _edges_col(r))).alias("edges"),
-    )
-    cover_e = cover.join(edges, "polygon_id")
-
-    def cand_for(cov):
-        return points.join(
-            F.broadcast(cov),
-            (F.shiftright(points["qlat"], shift) == cov["cov_cy"])
-            & (F.shiftright(points["qlon"], shift) == cov["cov_cx"]),
-            "inner",
-        )
-
-    small = cover_e.filter(F.size("edges") <= MAX_UNROLLED_EDGES)
-    out = cand_for(small).filter(
-        _inside_col_unrolled(F.col("edges"), F.col("qlat"), F.col("qlon"))
-    ).select(*keep_cols, "polygon_id", "qlat", "qlon")
-
-    max_edges = polygons.select(
-        F.max(F.size(F.flatten(_rings_norm_col(polygons))))
-        .alias("m")).first()["m"] or 0
-    if max_edges - 1 > MAX_UNROLLED_EDGES:
-        big = cover_e.filter(F.size("edges") > MAX_UNROLLED_EDGES)
-        out = out.unionByName(
-            cand_for(big).filter(
-                _inside_col(F.col("edges"), F.col("qlat"), F.col("qlon"))
-            ).select(*keep_cols, "polygon_id", "qlat", "qlon")
-        )
-    return out
+    idx = index if index is not None else PolygonIndex(
+        points.sparkSession, polygons, res)
+    probe = points.select(*keep_cols, "qlat", "qlon")
+    fields = probe.schema.fields
+    schema = StructType(fields[:-2] + [StructField("polygon_id", StringType())]
+                        + fields[-2:])
+    cells_bc, edges_bc, res, chunk = idx.cells_bc, idx.edges_bc, idx.res, CHUNK
+    return probe.mapInArrow(
+        lambda batches: _pip_batches(batches, cells_bc.value, edges_bc.value,
+                                     res, chunk),
+        schema)
 
 
 def pip_anti_join(
@@ -597,8 +502,8 @@ def pip_anti_join(
     """Points contained in NO polygon — the spatial filter-out (mask out
     covered regions, keep open water/unzoned points, etc.).
 
-    Scale shape: the ordinary pip_join finds the matches (broadcast
-    classified cover, probe never shuffled), their `keys` are distinct'd
+    Scale shape: the ordinary pip_join finds the matches (per-batch
+    cell-table lookup, probe never shuffled), their `keys` are distinct'd
     (matches <= points, usually far fewer), and one LEFT ANTI equi-join on
     `keys` drops them from the original point set — the anti join shuffles
     on the compact key columns only, and every input column of `points`

@@ -15,8 +15,9 @@ the remaining classic geospatial joins a 100 TB pipeline needs:
    skew module salts).
  * `zonal_stats` — per-polygon aggregates of the points each polygon
    contains (raster "zonal statistics" in vector form): composes the
-   classified-cover pip_join (broadcast build side, probe never shuffled)
-   with a single hash aggregation on polygon_id.
+   classified-cover pip_join (cell table broadcast once with the index,
+   probed per Arrow batch — no join, probe never shuffled) with a single
+   hash aggregation on polygon_id.
  * `trajectory_segments` / `trajectory_stats` — per-id ordered point
    sequences folded into consecutive segments (window lag, one shuffle on
    the id) and integer path metrics (Chebyshev length, squared displacement,
@@ -139,8 +140,8 @@ def zonal_stats(
 ) -> DataFrame:
     """Per-polygon aggregates over the points each polygon contains.
 
-    Classic raster zonal statistics in vector form: pip_join (broadcast
-    classified cover; probe side never shuffled) followed by one hash
+    Classic raster zonal statistics in vector form: pip_join (a per-batch
+    cell-table lookup; probe side never shuffled) followed by one hash
     aggregation on polygon_id.  Returns polygon_id, n_points and — when
     `value` is given — sum/min/max of the value expression (integer-exact
     when the value is integer).
@@ -1304,8 +1305,8 @@ def dwell_time(
     with enter/exit times, ping count, and dwell seconds (the
     how-long-was-each-vehicle-in-each-zone query).
 
-    Composes two existing pruned plans: pip_join (broadcast classified
-    cover, probe never shuffled) assigns pings to polygons, then the
+    Composes two existing pruned plans: pip_join (a per-batch cell-table
+    lookup, probe never shuffled) assigns pings to polygons, then the
     lag-flag-cumsum sessionization algebra (streaming/windows.py
     sessionize_batch's core) runs per (id, polygon_id) — one window
     shuffle on the composite key.  All comparisons are integer-exact;

@@ -73,12 +73,13 @@ def stream_pip(points_stream: DataFrame, index) -> DataFrame:
     """Streaming point-in-polygon enrichment: the north-star PIP join
     applied to an unbounded point stream.
 
-    Stateless stream-static join: the PolygonIndex (classified cover +
-    packed edge tensors) is built ONCE from the static polygon set and
-    broadcast; each micro-batch probes it exactly like the batch path
-    (operators/pip.pip_join), so stream output == batch output on the same
-    rows — pinned by tests/test_checkpoint_skew_stream.py.  No watermark is
-    needed (no state accrues: the join is per-row against a static side).
+    Stateless per-row enrichment against a static side: the PolygonIndex
+    (sorted cell table + packed edge tensors) is built ONCE from the static
+    polygon set and broadcast; each micro-batch runs the same Arrow kernel
+    as the batch path (operators/pip.pip_join, a `mapInArrow` over the
+    points — no stream-static join), so stream output == batch output on
+    the same rows — pinned by tests/test_checkpoint_skew_stream.py.  No
+    watermark is needed (no state accrues: each point is probed alone).
     """
     from ..operators.pip import pip_join
 
